@@ -51,8 +51,8 @@ object ExplainDump {
     // result reads — nothing to pin here)
     "llm_dedup_clusters_incr",
     // round 10: the CDC diff — both cutoff states resolve from one
-    // bucketed scan shape, full-outer join co-partitioned with the
-    // resolve windows (m15/m16/st9 execute their mutations eagerly, so
+    // bucketed scan shape, then one null-safe full-outer join
+    // (m15/m16/st9 execute their mutations eagerly, so
     // their returned plans are result reads — the CoW write shape is
     // pinned by KVSourceSpec instead)
     "m14_changes_between",

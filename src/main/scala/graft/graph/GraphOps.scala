@@ -20,6 +20,37 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
+  private val observationSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** A process-unique observation name, so two loops running at once on
+    * one session never share one. Spark 4 keys an observation by (name,
+    * Dataset id), which already keeps their per-round counts apart;
+    * unique names keep that from resting on the engine's keying (Spark
+    * 3 matched observed metrics by name alone). */
+  private def observationName(stem: String): String =
+    s"${stem}_${observationSeq.incrementAndGet()}"
+
+  /** Debug guard for a caller's `symmetric = true` claim, on under
+    * `spark.graft.debug.validate=true`: a uniform random sample of up to
+    * 1000 edges (one extra pass over the input) must find every reverse
+    * edge in the input. A spot check, not a proof: if a fraction f of
+    * the edges lack their reverse, the sample misses all of them with
+    * probability (1 - f)^1000 — under 1% once f >= 0.5% — and an input
+    * of at most 1000 edges is checked exhaustively. */
+  private def requireSymmetricClaim(in: DataFrame, caller: String,
+                                    remedy: String): Unit =
+    if (in.sparkSession.conf
+        .getOption("spark.graft.debug.validate").contains("true")) {
+      val missing = in.orderBy(rand(42L)).limit(1000)
+        .select(col("dst").as("src"), col("src").as("dst"))
+        .join(in, Seq("src", "dst"), "left_anti").limit(1).count()
+      if (missing > 0)
+        throw new IllegalArgumentException(
+          s"$caller(symmetric = true) called on an edge list missing " +
+            s"reverse edges — the claim is false; drop the flag ($remedy) " +
+            "or fix the input")
+    }
+
   /** EP edge payload (EP.scala:12-30); pb = round(probability*255). */
   case class Edge(src: Long, dst: Long, version: Long, pb: Long,
                   vendor: Long, ts: Long)
@@ -336,20 +367,11 @@ object GraphOps {
     // so it carries the same guard: a false claim here would silently
     // drop dangling vertices from the result and leak their rank mass,
     // so under spark.graft.debug.validate=true the claim is
-    // spot-checked (a bounded edge sample must find its reverse in the
-    // input) and misuse FAILS LOUDLY (RankingSpec pins it)
-    if (symmetric && pairs.sparkSession.conf
-        .getOption("spark.graft.debug.validate").contains("true")) {
-      val in = pairs.select(col("src"), col("dst"))
-      val missing = in.limit(1000)
-        .select(col("dst").as("src"), col("src").as("dst"))
-        .join(in, Seq("src", "dst"), "left_anti").limit(1).count()
-      if (missing > 0)
-        throw new IllegalArgumentException(
-          "pageRank(symmetric = true) called on an edge list missing " +
-            "reverse edges — the claim is false; drop the flag (the " +
-            "default detects sinks) or fix the input")
-    }
+    // spot-checked ([[requireSymmetricClaim]]) and misuse FAILS LOUDLY
+    // (RankingSpec pins it)
+    if (symmetric)
+      requireSymmetricClaim(pairs.select(col("src"), col("dst")), "pageRank",
+        "the default detects sinks")
     // The edge list is the immutable giant of the iteration: partition
     // it by the join key ONCE and cache that layout (the same
     // iterative-join discipline as [[bspIterateDeltaFrom]]) — otherwise
@@ -587,12 +609,8 @@ object GraphOps {
     // The signature rides the round's own checkpoint-materialization
     // job as an `observe` metric instead of a second full-pass
     // aggregation job per round (guide §1.2: one pass, not two).
-    // name-scoped per invocation: observation names must be unique
-    // among ACTIVE observations on the session, and two cc runs could
-    // in principle overlap on one session
-    val obsScope = System.identityHashCode(pairs)
     def sigObs(name: String): org.apache.spark.sql.Observation =
-      org.apache.spark.sql.Observation(s"${name}_$obsScope")
+      org.apache.spark.sql.Observation(observationName(name))
     def withSig(d: DataFrame, o: org.apache.spark.sql.Observation): DataFrame =
       d.observe(o, count(lit(1)).as("n"),
         sum(hash($"a", $"b").cast("long")).as("h"))
@@ -699,24 +717,15 @@ object GraphOps {
     * by construction) opt into skipping that shuffle with
     * `symmetric = true`; a false claim would peel an out-degree-based
     * (wrong) core, so under `spark.graft.debug.validate=true` the
-    * claim is spot-checked (a bounded edge sample must find its
-    * reverse in the input) and misuse FAILS LOUDLY instead
-    * (GraphOpsSpec pins it).
+    * claim is spot-checked (a random edge sample must find its reverse
+    * in the input; coverage in [[requireSymmetricClaim]]) and misuse
+    * FAILS LOUDLY instead (GraphOpsSpec pins it).
     */
   def kcoreFixpoint(pairs: DataFrame, k: Int, maxRounds: Int = 60,
       symmetric: Boolean = false): DataFrame = {
     val in = pairs.select(col("src"), col("dst"))
-    if (symmetric && pairs.sparkSession.conf
-        .getOption("spark.graft.debug.validate").contains("true")) {
-      val missing = in.limit(1000)
-        .select(col("dst").as("src"), col("src").as("dst"))
-        .join(in, Seq("src", "dst"), "left_anti").limit(1).count()
-      if (missing > 0)
-        throw new IllegalArgumentException(
-          "kcoreFixpoint(symmetric = true) called on an edge list " +
-            "missing reverse edges — the claim is false; drop the flag " +
-            "(the default symmetrizes) or fix the input")
-    }
+    if (symmetric)
+      requireSymmetricClaim(in, "kcoreFixpoint", "the default symmetrizes")
     // per-round edge counts ride each round's checkpoint job as an
     // `observe` metric instead of a second count() job per round
     // (guide §1.2: one pass, not two)
@@ -726,7 +735,7 @@ object GraphOps {
         () => o.get("n").asInstanceOf[Long])
     }
     val sym = if (symmetric) in else reverse(in).distinct()
-    val (sym0, n0) = counted(sym, s"kcore_n_stage_${System.identityHashCode(in)}")
+    val (sym0, n0) = counted(sym, observationName("kcore_n_stage"))
     var edges = sym0.localCheckpoint(true)
     var n = n0()
     var round = 0
@@ -741,7 +750,7 @@ object GraphOps {
         .join(keep.withColumnRenamed("vertex", "dst"), Seq("dst"),
           "left_semi")
         .select(col("src"), col("dst")),
-        s"kcore_n_${round}_${System.identityHashCode(in)}")
+        observationName(s"kcore_n_$round"))
       val next = nextObs.localCheckpoint(true)
       val m = m0()
       converged = m == n
@@ -869,7 +878,7 @@ object GraphOps {
       // the drained probe rides the delta's checkpoint job as an
       // `observe` count instead of a separate limit-1 job per superstep
       val deltaObs = org.apache.spark.sql.Observation(
-        s"g16_delta_${step}_${System.identityHashCode(batch)}")
+        observationName(s"g16_delta_$step"))
       val delta = pending.fold(vsState) { p =>
         vsState.as("c")
           .join(p.as("p"), $"c.vertex" === $"p.vertex" &&

@@ -223,8 +223,10 @@ class KVScan(path: String, layout: KVLayout, required: StructType,
 
   override def createReaderFactory(): PartitionReaderFactory = {
     // evaluated driver-side; `graft.kv.vectorized=false` restores the
-    // row-wise reader everywhere (debug / differential-testing escape
-    // hatch). Time-travel scans are row-wise regardless (see ctor doc).
+    // row-wise reader for this batch scan (debug / differential-testing
+    // escape hatch). Time-travel scans are row-wise regardless (see ctor
+    // doc). The graft-cdc stream reader ignores the flag: it always
+    // decodes through KVColumnarPartitionReader (KVCdc.scala).
     val session = org.apache.spark.sql.SparkSession.getActiveSession
     val vectorized =
       session.forall(_.conf.get("graft.kv.vectorized", "true").toBoolean) &&

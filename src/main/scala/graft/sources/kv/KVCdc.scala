@@ -209,8 +209,11 @@ case class KVCdcPartition(inner: KVBucketPartition, fromTs: Long, toTs: Long)
   * tombstone-mask state at BOTH cutoffs — a row with ts ≤ `from` feeds
   * both, a row in (from, to] feeds only the `to` state — then emits
   * the net per-cell differences. Mirrors KVResolvedPartitionReader's
-  * resolve semantics exactly (same value tie-break, same mask rules);
-  * the three resolve paths and this diff MUST agree cell-for-cell.
+  * resolve semantics exactly (same value tie-break, same mask rules).
+  * The resolve paths — `KVTable.resolve` (one key-clustered window
+  * pass), KVResolvedPartitionReader (bucket-local hash state) and
+  * `KVTable.changeLog`'s in-memory replay — and this diff MUST agree
+  * cell-for-cell; KVModelSpec checks the first two against one model.
   *
   * CPU shape (round-18 rewrite): the scan rides the same vectorized
   * parquet decode as the batch KV source (KVColumnarPartitionReader),

@@ -282,7 +282,7 @@ class KVResolvedReaderFactory(required: StructType, pushed: Array[Filter],
 }
 
 /** Bucket-local latest-wins resolve — the executor-side mirror of
-  * `KVTable.resolve` (write/KVStore.scala:377): per (key, family,
+  * `KVTable.resolve` (write/KVStore.scala): per (key, family,
   * qualifier) the max-(ts, value) non-tombstone cell wins, then row /
   * family / cell tombstones mask winners at-or-below their ts. State is
   * one entry per LIVE cell of the bucket — the same per-task footprint
@@ -354,9 +354,10 @@ class KVResolvedPartitionReader(p: KVBucketPartition, required: StructType,
   }
 
   /** Same-ts tie-break on VALUE in UTF-8 BINARY order — byte-identical
-    * to the library resolve's `max_by` over Spark strings
-    * (write/KVStore.scala). Java String.compareTo would order by UTF-16
-    * code units, which disagrees on supplementary-plane characters. */
+    * to the library resolve's `value desc_nulls_last` window order over
+    * Spark strings (`KVTable.resolve`). Java String.compareTo would
+    * order by UTF-16 code units, which disagrees on supplementary-plane
+    * characters. */
   private def cmpValue(a: UTF8String, b: UTF8String): Int =
     if (a == null && b == null) 0 else if (a == null) -1
     else if (b == null) 1 else a.compareTo(b)

@@ -1,7 +1,7 @@
 package graft.write
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Cell-level KV table with the reference's storage semantics
@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: appends are cheap (no read-modify-write at write time —
   * the reference's BufferedMutator analogue); resolution cost is one
-  * hash aggregation keyed by (key,family,qualifier), so periodic
+  * key-clustered window pass ([[KVTable.resolve]]), so periodic
   * compaction bounds read amplification exactly like HBase memstore
   * flush + compaction does. At 100 TB the compacted form is key-sorted
   * parquet → merge-joinable and range-prunable.
@@ -185,12 +185,13 @@ class KVTable(val spark: SparkSession, val path: String) {
     *
     * Shape at scale: both cutoff states come from the same bucketed
     * scan with a pushed `ts` predicate (row-group pruning), each
-    * resolve shuffles once on (key,family,qualifier), and the final
-    * full-outer join is co-partitioned with the resolve windows — no
-    * extra exchange on the join legs. Net-change semantics mean a
-    * cell written and superseded entirely inside (from, to] emits only
-    * the net row, and the same retention rule as [[resolvedAsOf]]
-    * applies to `from` cutoffs older than the last compaction. */
+    * resolve is one key-clustered window pass, and the null-safe
+    * full-outer join re-shuffles the two RESOLVED states on its
+    * coalesced keys — O(live cells), not O(log). Net-change semantics
+    * mean a cell written and superseded entirely inside (from, to]
+    * emits only the net row, and the same retention rule as
+    * [[resolvedAsOf]] applies to `from` cutoffs older than the last
+    * compaction. */
   def changesBetween(from: Long, to: Long): DataFrame = {
     require(from < to, s"changesBetween needs from < to, got [$from, $to]")
     changesBetweenStates(resolvedAsOf(from), resolvedAsOf(to))
@@ -239,8 +240,8 @@ class KVTable(val spark: SparkSession, val path: String) {
     * CDC-walk shape a derived-state consumer uses to catch up over
     * several refresh points (`m16_cdc_apply`): O(one log scan), not
     * O(cutoffs × log scans). [[changesBetween]] stays the declarative
-    * two-state form (Catalyst pushdown of the ts filter, broadcast
-    * tombstone masks — the better plan when diffing exactly two
+    * two-state form (Catalyst pushdown of the ts filter into each
+    * cutoff's resolve — the better plan when diffing exactly two
     * cutoffs far apart). */
   def changeLog(cutoffs: Seq[Long]): DataFrame = {
     require(cutoffs.size >= 2 && cutoffs == cutoffs.sorted &&
@@ -737,41 +738,40 @@ object KVTable {
     * non-tombstone cell wins, unless masked by a row/family/cell
     * tombstone at or above its ts (maxVersions=1 + delete markers).
     *
-    * NULL family/qualifier are legitimate cell coordinates (the
-    * version window already groups them), so the mask joins are
-    * null-SAFE — and any tombstone marker that is not 'row'/'family'
-    * masks at cell granularity, exactly like the executor-side
-    * resolve (KVResolvedPartitionReader) and [[KVTable.changeLog]]'s
-    * in-memory replay; the three paths must agree cell-for-cell. */
+    * One window pass: a single key-clustered sort on (key, family,
+    * qualifier, is_tomb, ts desc, value desc) serves the row, family and
+    * cell masks and the version rank — one exchange on an unbucketed
+    * input, none on a key-clustered one, no joins. `ts desc, value desc`
+    * is a TOTAL order, so same-ts cells resolve to a stable winner (as
+    * the reference's KeyValueOrdering, HBaseTable.scala:219-232). Window
+    * partitions group NULL family/qualifier as `<=>` would, and a marker
+    * that is not 'row'/'family' masks at cell granularity — exactly like
+    * KVResolvedPartitionReader and [[KVTable.changeLog]]'s replay; the
+    * three paths must agree cell-for-cell. */
   def resolve(cells: DataFrame): DataFrame = {
-    val rowDel = cells.filter(col("tomb") === "row")
-      .groupBy(col("key").as("rd_key")).agg(max(col("ts")).as("row_del_ts"))
-    val famDel = cells.filter(col("tomb") === "family")
-      .groupBy(col("key").as("fd_key"), col("family").as("fd_family"))
-      .agg(max(col("ts")).as("fam_del_ts"))
-    val cellDel = cells.filter(col("tomb").isNotNull &&
-        col("tomb") =!= "row" && col("tomb") =!= "family")
-      .groupBy(col("key").as("cd_key"), col("family").as("cd_family"),
-        col("qualifier").as("cd_qualifier"))
-      .agg(max(col("ts")).as("cell_del_ts"))
-    // ts desc + value desc: a TOTAL order within the version group, so
-    // two cells written at the same (key,family,qualifier,ts) resolve to
-    // a stable winner across runs (the reference's KeyValueOrdering is
-    // total for the same reason, HBaseTable.scala:219-232).
-    val w = Window.partitionBy(col("key"), col("family"), col("qualifier"))
-      .orderBy(col("ts").desc, col("value").desc_nulls_last)
-    cells.filter(col("tomb").isNull)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn")
-      .join(rowDel, col("key") <=> col("rd_key"), "left_outer")
-      .join(famDel, col("key") <=> col("fd_key") &&
-        col("family") <=> col("fd_family"), "left_outer")
-      .join(cellDel, col("key") <=> col("cd_key") &&
-        col("family") <=> col("cd_family") &&
-        col("qualifier") <=> col("cd_qualifier"), "left_outer")
-      .filter(col("ts") > coalesce(col("row_del_ts"), lit(Long.MinValue)) &&
-              col("ts") > coalesce(col("fam_del_ts"), lit(Long.MinValue)) &&
-              col("ts") > coalesce(col("cell_del_ts"), lit(Long.MinValue)))
+    // one materialized sort column: an inline `tomb IS NOT NULL` would
+    // be aliased afresh per window and split the shared sort
+    val version = Seq(col("is_tomb"), col("ts").desc, col("value").desc_nulls_last)
+    val byKey = Window.partitionBy(col("key"))
+      .orderBy(col("family") +: col("qualifier") +: version: _*)
+    val byFamily = Window.partitionBy(col("key"), col("family"))
+      .orderBy(col("qualifier") +: version: _*)
+    val byCell = Window.partitionBy(col("key"), col("family"), col("qualifier"))
+      .orderBy(version: _*)
+    def maskTs(marker: Column, w: WindowSpec): Column =
+      coalesce(max(when(marker, col("ts"))).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)),
+        lit(Long.MinValue))
+    cells.withColumn("is_tomb", col("tomb").isNotNull)
+      .select(col("*"),
+        maskTs(col("tomb") === "row", byKey).as("row_del_ts"),
+        maskTs(col("tomb") === "family", byFamily).as("fam_del_ts"),
+        maskTs(col("is_tomb") && !col("tomb").isin("row", "family"), byCell)
+          .as("cell_del_ts"),
+        row_number().over(byCell).as("rn"))
+      .filter(!col("is_tomb") && col("rn") === 1 &&
+        col("ts") > col("row_del_ts") && col("ts") > col("fam_del_ts") &&
+        col("ts") > col("cell_del_ts"))
       .select(col("key"), col("family"), col("qualifier"), col("value"), col("ts"))
   }
 }

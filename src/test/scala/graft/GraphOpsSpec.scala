@@ -297,6 +297,47 @@ class GraphOpsSpec extends AnyFunSuite with SparkSpec {
     } finally spark.conf.unset("spark.graft.debug.validate")
   }
 
+  test("kcoreFixpoint: the symmetric=true spot-check samples the whole " +
+    "input, not just its first partitions") {
+    // 3000 symmetric rows come first; the 3000 one-directional edges
+    // sit behind them, out of reach of a first-1000-rows sample
+    val sym = (1L to 1500L).flatMap(i => Seq((i, i + 1), (i + 1, i)))
+      .toDF("src", "dst").repartition(1)
+    val oneDir = (1L to 3000L).map(i => (i + 100000L, i + 200000L))
+      .toDF("src", "dst").repartition(1)
+    spark.conf.set("spark.graft.debug.validate", "true")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        GraphOps.kcoreFixpoint(sym.union(oneDir), 2, symmetric = true)
+      }
+      assert(e.getMessage.contains("missing reverse edges"))
+    } finally spark.conf.unset("spark.graft.debug.validate")
+  }
+
+  test("two kcoreFixpoint runs at once on one session each reach their " +
+    "own fixpoint") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    // a triangle with a 10-vertex tail peels one tail vertex per round;
+    // a K4 is a 2-core already. If either run read the other's per-round
+    // counts, the long peel could stop early with tail edges left in.
+    val triangle = Seq((1L, 2L), (2L, 3L), (1L, 3L))
+    val tail = (3L until 13L).map(i => (i, i + 1))
+    val k4 = for (a <- 21L to 24L; b <- a + 1 to 24L) yield (a, b)
+    def both(es: Seq[(Long, Long)]) = es.flatMap { case (a, b) => Seq((a, b), (b, a)) }.toSet
+    val runs = Seq(triangle ++ tail -> both(triangle), k4 -> both(k4))
+    val results = Future.sequence((1 to 2).flatMap(_ => runs).map {
+      case (edges, want) => Future {
+        (GraphOps.kcoreFixpoint(edges.toDF("src", "dst"), 2)
+          .as[(Long, Long)].collect().toSet, want)
+      }
+    })
+    Await.result(results, 5.minutes).foreach { case (got, want) =>
+      assert(got === want)
+    }
+  }
+
   // --- probability-product incremental BSP (reference
   //     incrementalNetBSP, HGraphTable.scala:143-228) ---
 

@@ -130,7 +130,7 @@ class KVTableSpec extends AnyFunSuite with SparkSpec {
     assert(t.changesBetween(1L, 2L).filter($"key" === 1L).count() === 0)
     assert(t.changeLog(Seq(1L, 2L)).filter($"key" === 1L).count() === 0)
     // a cell tombstone at the (null, null) coordinate masks it — on the
-    // library resolve (null-safe mask join) exactly as on the replay
+    // library resolve (window partitions group NULLs) exactly as on the replay
     t.put(Seq((1L, Option.empty[String], Option.empty[String],
         Option.empty[String], 3L, Option("cell")))
       .toDF("key", "family", "qualifier", "value", "ts", "tomb"))
@@ -239,6 +239,46 @@ class KVTableSpec extends AnyFunSuite with SparkSpec {
     // and the next compaction folds the racing put into the bucketed state
     t.compact()
     assert(t.resolved().select($"key").as[Long].collect().toSet === Set(1L, 2L))
+  }
+
+  test("resolve is one window pass: a log-only table plans one key " +
+      "exchange, one sort, one scan and no join; compacted, no exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // AQE wraps the plan in a leaf node; the helper walks into it
+    object H extends AdaptiveSparkPlanHelper
+    def shape(p: SparkPlan): (Seq[ShuffleExchangeExec], Int, Int, Int) = (
+      H.collect(p) { case e: ShuffleExchangeExec => e },
+      H.collect(p) { case s: SortExec => s }.size,
+      H.collect(p) { case j: BaseJoinExec => j }.size,
+      H.collect(p) { case s: FileSourceScanExec => s }.size)
+    val t = fresh("planshape")
+    t.put(cells((1L, "F", "a", "x", 1L), (1L, "T", "b", "y", 2L),
+      (2L, "F", "a", "z", 1L)))
+    t.delete(Seq((1L, Option("T"), Option.empty[String]))
+      .toDF("key", "family", "qualifier"), ts = 3L)
+    val logOnly = t.resolved()
+    val plan = logOnly.queryExecution.executedPlan
+    val (exchanges, sorts, joins, scans) = shape(plan)
+    assert(exchanges.size === 1, s"one key exchange expected:\n$plan")
+    exchanges.head.outputPartitioning match {
+      case HashPartitioning(Seq(k: org.apache.spark.sql.catalyst.expressions
+          .AttributeReference), _) => assert(k.name === "key", plan.toString)
+      case other => fail(s"exchange partitions by $other, not key:\n$plan")
+    }
+    assert(sorts === 1, s"one sort expected:\n$plan")
+    assert(joins === 0, s"resolve must not join:\n$plan")
+    assert(scans === 1, s"one scan of the log expected:\n$plan")
+    assert(logOnly.as[(Long, String, String, String, Long)].collect().toSet ===
+      Set((1L, "F", "a", "x", 1L), (2L, "F", "a", "z", 1L)))
+    t.compact()
+    val compacted = t.resolved().queryExecution.executedPlan
+    val (cExchanges, _, cJoins, cScans) = shape(compacted)
+    assert(cExchanges.isEmpty && cJoins === 0 && cScans === 1,
+      s"compacted resolve must read one bucketed scan, unshuffled:\n$compacted")
   }
 
   test("compact leaves no phantom log: bare bucketed scan after, union " +
